@@ -20,6 +20,9 @@ object GraftEngine {
     * tables from the same map (reference: streamsql.go:490-515 RegisterTable). */
   def sql(query: String, tables: Map[String, DataFrame]): DataFrame = {
     val stmt = Parser.parseStatement(query)
+    // streaming plan: local checkpoint files without forked chmod/readlink
+    tables.values.find(_.isStreaming)
+      .foreach(df => graft.streaming.LocalCheckpointFileManager.install(df.sparkSession))
     val builder = new PlanBuilder(tables)
     // ANSI precedence: INTERSECT binds tighter than UNION/EXCEPT —
     // a UNION b INTERSECT c = a UNION (b INTERSECT c)

@@ -35,12 +35,6 @@ object Bpe {
   /** End-of-word sentinel symbol (kept distinct from any character). */
   val EndOfWord = "</w>"
 
-  /** Learn `numMerges` merges from the corpus. Deterministic: ties on the
-    * pair count break lexicographically on (left, right), so the merge
-    * table reproduces run-over-run and partition-over-partition.
-    *
-    * @param minCount stop early when the best pair occurs fewer times
-    * @return merges in rank order, e.g. `("e","s") :: ("es","t") :: …` */
   /** Pin a vocab-bounded working RDD: explicitly persisted (so the
     * previous round's copy can be FREED — bare localCheckpoint blocks
     * cannot be), lineage truncated (persist alone does NOT — without
@@ -58,7 +52,7 @@ object Bpe {
   }
 
   /** [[pinRdd]] for the standing pair table, with the NEXT round's
-    * arg-max fused into the materializing action: one treeAggregate both
+    * arg-max fused into the materializing action: one `aggregate` both
     * caches the checkpoint blocks and returns the best (count desc, then
     * binary-UTF-8 lexicographic (l, r)) pair — the tie-break is
     * [[UTF8String]].compareTo, bit-identical to the DataFrame
@@ -137,6 +131,12 @@ object Bpe {
   private def partsFor(rows: Long): Int =
     math.max(1L, math.min(64L, rows / 100000L)).toInt
 
+  /** Learn `numMerges` merges from the corpus. Deterministic: ties on the
+    * pair count break lexicographically on (left, right), so the merge
+    * table reproduces run-over-run and partition-over-partition.
+    *
+    * @param minCount stop early when the best pair occurs fewer times
+    * @return merges in rank order, e.g. `("e","s") :: ("es","t") :: …` */
   def trainMerges(
       docs: DataFrame,
       numMerges: Int,
@@ -209,6 +209,9 @@ object Bpe {
     val ckptAll = "spark.checkpoint.checkpointAllMarkedAncestors"
     val prevCkptAll = sc.getLocalProperty(ckptAll)
     sc.setLocalProperty(ckptAll, "true")
+    // the round in flight's persisted RDDs, freed in the finally if its
+    // action throws (the standing tables are freed there on every exit)
+    var inFlight: Seq[RDD[_]] = Nil
     try while (round < numMerges && !done) {
       best match {
         // deterministic top pair: count, then binary-lexicographic (l, r)
@@ -235,16 +238,20 @@ object Bpe {
               else adjArr(s).map(p => (p, -c)) ++ adjArr(ns).map(p => (p, c))
             }
           }
-          val (newPairsRdd, newBest) = pinPairs(pairsRdd.union(deltas)
+          val newPairs = pairsRdd.union(deltas)
             .reduceByKey(_ + _, dictParts)
-            .filter(_._2 > 0))
+            .filter(_._2 > 0)
+          inFlight = Seq(newDict, newPairs)
+          best = pinPairs(newPairs)._2
           pairsRdd.unpersist(false); dictRdd.unpersist(false)
-          pairsRdd = newPairsRdd; best = newBest
-          dictRdd = newDict
+          pairsRdd = newPairs; dictRdd = newDict
+          inFlight = Nil
           round += 1
       }
-    } finally sc.setLocalProperty(ckptAll, prevCkptAll)
-    pairsRdd.unpersist(false); dictRdd.unpersist(false)
+    } finally {
+      sc.setLocalProperty(ckptAll, prevCkptAll)
+      (inFlight :+ pairsRdd :+ dictRdd).foreach(_.unpersist(false))
+    }
     merges.toSeq
   }
 
